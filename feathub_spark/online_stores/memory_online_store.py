@@ -4,12 +4,17 @@ Semantics per the reference (online_stores/memory_online_store.py:40-163):
 ``put`` upserts rows keeping the max-timestamp row per key; ``get`` returns
 the latest row per requested key, optionally projected to selected features.
 The store is a serving-side structure (pandas), not a Spark job.
+
+``get`` looks keys up through a key index (``pd.Index``/``MultiIndex``) built
+lazily per table and dropped by ``put``, instead of merging the request
+against the whole table; ``_tables[name]`` stays the plain frame that the
+Spark-side readers (``MemoryStoreSource``, the lookup join) use.
 """
 
 from __future__ import annotations
 
 import threading
-from typing import Dict, List, Optional, Sequence
+from typing import Dict, List, Optional, Sequence, Tuple
 
 import pandas as pd
 
@@ -24,6 +29,8 @@ class MemoryOnlineStore:
         self._tables: Dict[str, pd.DataFrame] = {}
         self._keys: Dict[str, List[str]] = {}
         self._ts_fields: Dict[str, Optional[str]] = {}
+        # table name -> (the frame it indexes, its key index)
+        self._indexes: Dict[str, Tuple[pd.DataFrame, pd.Index]] = {}
 
     @classmethod
     def get_instance(cls) -> "MemoryOnlineStore":
@@ -46,6 +53,7 @@ class MemoryOnlineStore:
     ) -> None:
         if not isinstance(data, pd.DataFrame):
             data = data.toPandas()
+        self._indexes.pop(table_name, None)
         if key_fields is None:
             key_fields = self._keys.get(table_name)
         if not key_fields:
@@ -101,7 +109,6 @@ class MemoryOnlineStore:
         cols = list(table.columns)
         if feature_names is not None:
             cols = key_fields + [c for c in feature_names if c not in key_fields]
-            table = table[cols]
         # the STORED value wins on name overlap (a request column or an
         # earlier lookup sharing a feature name) — matching the dict-
         # overwrite semantics of SqlOnlineStore/RedisOnlineStore.get; a
@@ -110,9 +117,39 @@ class MemoryOnlineStore:
         clash = [
             c for c in cols if c not in key_fields and c in input_data.columns
         ]
-        return input_data.drop(columns=clash).merge(
-            table, on=key_fields, how="left"
+        out = input_data.drop(columns=clash).reset_index(drop=True)
+        # left-join semantics: request order and duplicates kept, a missing
+        # key reads NULL (ints upcast to float, as a left merge does)
+        rows = self._table_index(table_name, table, key_fields).get_indexer(
+            _key_index(input_data, key_fields)
         )
+        for c in cols:
+            if c not in key_fields:
+                col = table[c]
+                values = (
+                    col.array
+                    if isinstance(col.dtype, pd.api.extensions.ExtensionDtype)
+                    else col.to_numpy()
+                )
+                out[c] = pd.api.extensions.take(values, rows, allow_fill=True)
+        return out
+
+    def _table_index(
+        self, table_name: str, table: pd.DataFrame, key_fields: List[str]
+    ) -> pd.Index:
+        # keyed on the frame's identity too, so a get racing a put never
+        # pairs the new frame with the old frame's row positions
+        cached = self._indexes.get(table_name)
+        if cached is None or cached[0] is not table:
+            cached = (table, _key_index(table, key_fields))
+            self._indexes[table_name] = cached
+        return cached[1]
 
     def all_tables(self) -> List[str]:
         return sorted(self._tables)
+
+
+def _key_index(frame: pd.DataFrame, key_fields: List[str]) -> pd.Index:
+    if len(key_fields) == 1:
+        return pd.Index(frame[key_fields[0]])
+    return pd.MultiIndex.from_frame(frame[key_fields])
